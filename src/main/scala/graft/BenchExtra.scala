@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Round-6 optimization instrumentation (guide §1): query-phase-only timing
   * with the EXACT same session config, ensure steps, warm-up and
   * `.count()` action as [[Bench]] phase 2, plus:
-  *   - `SPARK_GRAFT_REPS` repeats per query (default 2) — min is reported;
+  *   - `SPARK_GRAFT_REPS` repeats per query (default 2) — the min over
+  *     successful reps is reported; failed reps never enter `queries_min`
+  *     and are counted per query under `failed`;
   *   - optional `.explain("formatted")` dumps per query
   *     (`SPARK_GRAFT_PLAN_DIR`) so plan claims are reviewable offline;
   *   - optional query-name filter (`SPARK_GRAFT_ONLY`, comma-separated).
@@ -81,27 +83,30 @@ object BenchExtra {
           try pw.write(plan) finally pw.close()
         } catch { case _: Throwable => () }
       }
+      // a failed rep has no wall (None): it must not read as a fast one
       val secs = (0 until reps).map { _ =>
-        val (_, sec) = timeIt {
-          try fn(spark, sfDir).count()
+        val (ok, sec) = timeIt {
+          try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
-            // visible, unlike the frozen Bench's silent -1: a failing query
-            // must not read as a speedup in queries_min
             System.err.println(s"[bench-extra] $name FAILED: ${e.getMessage}")
-            -1L
+            false
           }
         }
-        sec
+        Option.when(ok)(sec)
       }
       spark.sparkContext.setJobDescription(null)
       name -> secs
     }
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + f"${v.min}%.3f"
+    val mins = results.flatMap { case (k, v) => v.flatten.minOption.map(k -> _) }
+    val qs = mins.map { case (k, m) => "\"" + k + "\":" + f"$m%.3f" }
+      .mkString("{", ",", "}")
+    val failed = results.collect { case (k, v) if v.contains(None) =>
+      "\"" + k + "\":" + v.count(_.isEmpty)
     }.mkString("{", ",", "}")
-    val total = results.map(_._2.min).sum
+    val total = mins.map(_._2).sum
     println(s"""{"bench_extra":true,"sf":"$sfDir","reps":$reps,""" +
-      s""""queries_min":$qs,"queries_total_sec":${f"$total%.1f"}}""")
+      s""""queries_min":$qs,"failed":$failed,""" +
+      s""""queries_total_sec":${f"$total%.1f"}}""")
     spark.stop()
   }
 }

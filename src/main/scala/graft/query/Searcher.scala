@@ -32,10 +32,13 @@ import graft.query.BlockMaxWand.{QueryTerm, WandQuery}
   *     block-max WAND kernel over its own hash-map (shards are disjoint doc
   *     ranges — embarrassingly parallel, the ES fan-out model);
   *  4. per-shard top-k hits (k × shards × queries tuples, tiny) merge on the
-  *     driver under the deterministic global ordering.
+  *     driver under the deterministic global ordering, and the merged rows
+  *     become a driver-local frame already in (qid, rnk) order.
   *
   * No shuffle, no sort, no scan of non-query terms anywhere on the query
-  * path — the per-query plan is two short jobs over cached partitions.
+  * path — the per-query plan is two short jobs over cached partitions (one
+  * once the handle has cached every query term's df); collecting the
+  * result frame runs none.
   */
 object Searcher {
 
@@ -70,12 +73,18 @@ object Searcher {
       val indexDir: String, val stats: CorpusStats, val tightBounds: Boolean,
       private[Searcher] val shards: RDD[ShardIndex]) extends AutoCloseable {
     /** Driver-side term→df memo (misses resolved by a distributed lookup;
-      * 0 = known-absent). Query-sized growth — only terms actually queried
-      * ever reach the driver, never the vocabulary. */
+      * 0 = known-absent), at most [[DfCacheMaxTerms]] entries — only terms
+      * actually queried ever reach the driver, never the vocabulary. */
     private[Searcher] val dfCache =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     def close(): Unit = shards.unpersist()
   }
+
+  /** Cap on a handle's df memo. A miss batch that would pass it clears the
+    * memo first (no lock, no per-entry bookkeeping on the hit path): dfs of
+    * one snapshot never change, so a cleared term only costs one more
+    * lookup job. 65,536 short strings are a few MB of driver heap. */
+  private val DfCacheMaxTerms = 1 << 16
 
   /** Field-qualified key inside a multi-field shard index. NUL never occurs
     * in FIELD names (mapping identifiers), so the first NUL delimits the
@@ -170,8 +179,8 @@ object Searcher {
     * One narrow kernel job over the resident multi-field shards — the
     * combined-bound WAND ([[BlockMaxWand.scoreCursors]]) prunes with
     * θ = kth-best SUM, so a high-df leg's posting list is skipped through,
-    * not decoded wholesale. Returns (rnk, doc_id, score_x6) under the
-    * deterministic ordering. */
+    * not decoded wholesale. Returns (rnk, doc_id, score_x6) as a
+    * `LocalRelation` in rank order ([[topKFrame]]). */
   def multiSearch(mh: MultiHandle, legs: Seq[MultiLeg], k: Int,
                   minShouldMatch: Int = 1,
                   filter: Option[(String, Seq[String])] = None,
@@ -228,7 +237,6 @@ object Searcher {
     val msm = minShouldMatch
     val tb = disMaxTieBreaker
     val reqMask = requiredLegs.foldLeft(0L)((m, l) => m | (1L << l))
-    val shareTheta = sys.env.getOrElse("GRAFT_SHARED_THETA", "1") != "0"
     val runId = java.util.UUID.randomUUID().toString
 
     val merged = treeTopK(mh.shards, kk) { si =>
@@ -264,14 +272,15 @@ object Searcher {
           (hasFilter && fblocks.isEmpty)) Iterator.empty
       else BlockMaxWand.scoreCursors(ArraySeq.unsafeWrapArray(cursors),
         ArraySeq.unsafeWrapArray(fblocks), kk, msm,
-        if (shareTheta) BlockMaxWand.ThetaBoards.boardFor(runId) else null,
-        tb, ArraySeq.unsafeWrapArray(phraseCursors),
+        BlockMaxWand.ThetaBoards.boardFor(runId), tb,
+        ArraySeq.unsafeWrapArray(phraseCursors),
         ArraySeq.unsafeWrapArray(nblocks), reqMask)
         .iterator.map { case (d, s) => (0, d, s) }
     }
 
     // single bool query ⇒ one qid (0); the shared frame builder keeps the
-    // deterministic-ordering contract in ONE place
+    // deterministic-ordering contract in ONE place, and the projection
+    // folds into its LocalRelation
     topKFrame(mh.spark, merged).drop("qid")
   }
 
@@ -521,7 +530,14 @@ object Searcher {
       depth = math.max(2, (math.log(parts.toDouble) / math.log(64.0)).ceil.toInt))
   }
 
-  /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k. */
+  /** Build the (qid, rnk, doc_id, score_x6) frame from merged top-k.
+    *
+    * Ordering contract: the frame is a driver-local `LocalRelation` whose
+    * rows come in (qid, rnk) order — qid ascending, each query's hits in
+    * the rank order [[treeTopK]] merged them in. `collect()`, and a
+    * projection, filter or limit over it, keep that order and run no Spark
+    * job. Callers that join the frame (a doc_map key lookup, a filter
+    * semi-join) lose the order and must re-sort. */
   private def topKFrame(spark: SparkSession,
       merged: Map[Int, Array[(Long, Long)]]): DataFrame = {
     val rows = new java.util.ArrayList[Row]()
@@ -537,11 +553,14 @@ object Searcher {
       StructField("rnk", LongType, nullable = false),
       StructField("doc_id", LongType, nullable = false),
       StructField("score_x6", LongType, nullable = false)))
-    spark.createDataFrame(rows, schema).orderBy("qid", "rnk")
+    spark.createDataFrame(rows, schema)
   }
 
   /** Search via a resident handle: two short jobs over the cached shard
-    * indexes, tree-merged top-k. `chain` analyzes the query string
+    * indexes (the df lookup is skipped once every query term's df is
+    * cached), tree-merged top-k. Returns (qid, rnk, doc_id, score_x6) as a
+    * `LocalRelation` in (qid, rnk) order — see [[topKFrame]]; callers that
+    * join must re-sort. `chain` analyzes the query string
     * with the target field's analyzer (reference semantics: ES analyzes
     * query text with the queried field's mapped chain,
     * elastic/settings.go:87-138) — default is the stopword text chain the
@@ -571,14 +590,12 @@ object Searcher {
     * partials combine pairwise, so only O(queries × k) tuples ever reach
     * the driver (treeTopK). Unique run id: shards sharing a JVM share one
     * θ board per query (BlockMaxWand.ThetaBoards) — head-term pruning
-    * tightens as soon as ANY co-resident shard fills its heap.
-    * GRAFT_SHARED_THETA=0 disables (A/B benchmarking knob). */
+    * tightens as soon as ANY co-resident shard fills its heap. */
   private def runWand(h: Handle, wandQueries: Array[WandQuery],
       k: Int): DataFrame = {
     val avgdl = h.stats.avgdl
     val tight = h.tightBounds
     val kk = k
-    val shareTheta = sys.env.getOrElse("GRAFT_SHARED_THETA", "1") != "0"
     val runId = java.util.UUID.randomUUID().toString
     val merged = treeTopK(h.shards, kk) { si =>
       wandQueries.iterator.flatMap { q =>
@@ -590,8 +607,7 @@ object Searcher {
           }.toMap
         if (byTerm.isEmpty) Iterator.empty
         else BlockMaxWand.scoreShard(q, byTerm, avgdl, kk, tight,
-          if (shareTheta) BlockMaxWand.ThetaBoards.boardFor(s"$runId/${q.qid}")
-          else null)
+          BlockMaxWand.ThetaBoards.boardFor(s"$runId/${q.qid}"))
           .iterator.map { case (doc, s) => (q.qid, doc, s) }
       }
     }
@@ -664,7 +680,9 @@ object Searcher {
     * dictionary terms within its AUTO edit budget, ranked (distance asc,
     * df desc, term asc) — Lucene DirectSpellChecker's candidate order —
     * top `size`. Present terms produce no suggestions (that is what
-    * `missing` means). Returns (input, rnk, suggestion, df, distance). */
+    * `missing` means). Returns (input, rnk, suggestion, df, distance) as a
+    * `LocalRelation` in (input, rnk) order — inputs sorted, candidates in
+    * rank order — with no Spark sort planned. */
   def termSuggest(h: Handle, text: String, size: Int,
       chain: String => Array[String] = Analyzer.analyzeStop): DataFrame = {
     import h.spark.implicits._
@@ -682,7 +700,6 @@ object Searcher {
       }
     }.toSeq
     rows.toDF("input", "rnk", "suggestion", "df", "distance")
-      .orderBy("input", "rnk")
   }
 
   def fuzzySearch(h: Handle, rawQueries: Seq[(Int, String)], k: Int,
@@ -732,18 +749,27 @@ object Searcher {
   private def resolveDfs(shards: RDD[ShardIndex],
       dfCache: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long],
       uniqueTerms: Array[String]): Map[String, Long] = {
-    val missing: Array[String] = uniqueTerms.filterNot(dfCache.containsKey)
-    if (missing.nonEmpty) {
-      val looked = shards.flatMap { si =>
-        missing.flatMap { t =>
-          val tp = si.terms.get(t)
-          if (tp == null) None else Some((t, tp.df))
-        }
-      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
-      missing.foreach(t => dfCache.put(t, Long.box(looked.getOrElse(t, 0L))))
-    }
-    uniqueTerms.iterator
-      .map(t => t -> dfCache.get(t).longValue())
+    // read each term once: a concurrent miss batch may clear the memo
+    // between a check and a second read
+    val cached: Array[(String, java.lang.Long)] =
+      uniqueTerms.map(t => t -> dfCache.get(t))
+    val missing: Array[String] = cached.collect { case (t, null) => t }
+    val looked: Map[String, Long] =
+      if (missing.isEmpty) Map.empty
+      else {
+        val found = shards.flatMap { si =>
+          missing.flatMap { t =>
+            val tp = si.terms.get(t)
+            if (tp == null) None else Some((t, tp.df))
+          }
+        }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+        if (dfCache.size > DfCacheMaxTerms - missing.length) dfCache.clear()
+        missing.foreach(t => dfCache.put(t, Long.box(found.getOrElse(t, 0L))))
+        found
+      }
+    cached.iterator
+      .map { case (t, df) =>
+        t -> Option(df).fold(looked.getOrElse(t, 0L))(_.longValue) }
       .filter(_._2 > 0L).toMap
   }
 

@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analysis.Analyzer
 import graft.index.{Codec, PostingsBuilder, TextIndex}
 import graft.io.TableIO
 import graft.model.PostingBlock
@@ -75,10 +80,10 @@ class IndexSpec extends AnyFunSuite {
   test("WAND search is rank- and score-identical to the naive Catalyst scorer") {
     val dir = freshDir("wand")
     PostingsBuilder.build(spark, TextQueries.docs(spark, sf), dir, buildCfg)
-    val wand = Searcher.search(spark, dir, QuerySet.queries, QuerySet.K)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val naive = TextQueries.bm25QuerySet(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val wand = rows(Searcher.search(spark, dir, QuerySet.queries, QuerySet.K))
+    val naive = rows(TextQueries.bm25QuerySet(spark, sf))
     assert(wand === naive)
     // the FORCED tree fan-in (the >threshold path a 10^6-shard cluster
     // takes) merges losslessly too — identical frame through the extra
@@ -86,10 +91,66 @@ class IndexSpec extends AnyFunSuite {
     val prev = Searcher.treeFanInThreshold
     try {
       Searcher.treeFanInThreshold = 0
-      val tree = Searcher.search(spark, dir, QuerySet.queries, QuerySet.K)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      val tree = rows(Searcher.search(spark, dir, QuerySet.queries, QuerySet.K))
       assert(tree === naive)
     } finally Searcher.treeFanInThreshold = prev
+
+    // serving shape on a resident handle: a search is one kernel job plus
+    // one df lookup job on a miss; its frame is a LocalRelation already in
+    // (qid, rnk) order, so collecting it plans no sort and runs no job
+    val sc = spark.sparkContext
+    val group = "index-spec-serving"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      Bridge.drainListenerBus(sc)
+      jobs.set(0)
+      val r = body
+      Bridge.drainListenerBus(sc)
+      (r, jobs.get)
+    }
+    val h = Searcher.open(spark, dir)
+    val mh = Searcher.openMulti(spark, Seq("body" -> dir))
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "serving job count")
+    try {
+      val (cold, coldJobs) = jobsOf(
+        rows(Searcher.search(h, QuerySet.queries, QuerySet.K)))
+      assert(coldJobs === 2, "df miss: one lookup job + one kernel job")
+      val frame = Searcher.search(h, QuerySet.queries, QuerySet.K)
+      val plan = frame.queryExecution
+      assert(plan.optimizedPlan.collectFirst { case s: Sort => s }.isEmpty)
+      assert(plan.executedPlan.isInstanceOf[LocalTableScanExec])
+      val (warm, warmJobs) = jobsOf(rows(frame))
+      assert(warmJobs === 0, "collecting the frame runs no job")
+      assert(jobsOf(rows(Searcher.search(h, QuerySet.queries, QuerySet.K)))._2
+        === 1, "df cached: the kernel job only")
+      assert(warm === naive && cold === naive)
+      assert(warm === warm.sortBy(r => (r._1, r._2)))
+
+      val (qid, text) = QuerySet.queries.head
+      val leg = Searcher.MultiLeg("body", Analyzer.analyzeStop(text)
+        .groupBy(identity).view.mapValues(_.length).toMap)
+      Searcher.multiSearch(mh, Seq(leg), QuerySet.K).collect() // df warm-up
+      val (multi, multiJobs) = jobsOf {
+        val f = Searcher.multiSearch(mh, Seq(leg), QuerySet.K)
+        assert(f.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+        f.collect().toSeq
+          .map(r => (qid.toLong, r.getLong(0), r.getLong(1), r.getLong(2)))
+      }
+      assert(multiJobs === 1)
+      assert(multi === naive.filter(_._1 == qid))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      mh.close()
+      h.close()
+    }
   }
 
   test("re-running a completed build is a no-op (snapshot idempotence)") {
